@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from htmld_spark.functions.docmap import map_docs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -269,31 +271,22 @@ def ivf_build_sampled(
     )
     cents = _lloyd_fit(X, n_cells, seed)
 
-    def assign_batches(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            names = batch.schema.names
-            vecs = batch.column(names.index(vec_col)).to_pylist()
-            cells = [
+    def assign(vecs):
+        return {
+            out_col: [
                 int(
                     np.argmin(
-                        ((cents - np.asarray(v, dtype=np.float64)) ** 2).sum(
-                            axis=1
-                        )
+                        ((cents - np.asarray(v, dtype=np.float64)) ** 2).sum(axis=1)
                     )
                 )
                 for v in vecs
             ]
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [pa.array(cells, pa.int32())],
-                names=names + [out_col],
-            )
+        }
 
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema
     ) + f", {out_col} int"
-    assigned = df.mapInArrow(assign_batches, schema)
+    assigned = map_docs(df, assign, schema, args=(vec_col,), keep=df.columns)
     return assigned, [list(c) for c in cents]
 
 

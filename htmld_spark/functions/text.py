@@ -15,6 +15,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from htmld_spark.functions.docmap import map_docs
+
 TOKEN_SPLIT = r"\s+"
 
 # Language-ID stopword probes. Deliberately small + disjoint; tie-break is
@@ -1400,30 +1402,20 @@ def compression_ratio(
     exists, so this runs as one mapInArrow crossing per batch (C-side zlib
     inside; n_chars counts characters, matching F.length)."""
 
-    def ratio_batches(batches):
-        import zlib
+    import zlib
 
-        import pyarrow as pa
+    def ratios(texts):
+        n_chars, out = [], []
+        for t in texts:
+            t = t or ""
+            raw = t.encode("utf-8")
+            n_chars.append(len(t))
+            out.append(round(len(zlib.compress(raw, 6)) / len(raw), 4) if raw else 0.0)
+        return {"n_chars": n_chars, "zlib_ratio": out}
 
-        for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index(id_col))
-            texts = batch.column(names.index(text_col)).to_pylist()
-            n_chars, ratios = [], []
-            for t in texts:
-                t = t or ""
-                raw = t.encode("utf-8")
-                n_chars.append(len(t))
-                ratios.append(
-                    round(len(zlib.compress(raw, 6)) / len(raw), 4) if raw else 0.0
-                )
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(n_chars, pa.int64()), pa.array(ratios, pa.float64())],
-                names=[id_col, "n_chars", "zlib_ratio"],
-            )
-
-    return df.select(id_col, text_col).mapInArrow(
-        ratio_batches, f"{id_col} bigint, n_chars bigint, zlib_ratio double"
+    return map_docs(
+        df, ratios, f"{id_col} bigint, n_chars bigint, zlib_ratio double",
+        args=(text_col,), keep=(id_col,), blob=text_col,
     )
 
 

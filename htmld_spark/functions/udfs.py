@@ -1,22 +1,22 @@
-"""Arrow-batched extraction UDF — pipeline operator R6 (SURVEY.md §2.B).
+"""Document operators over pages frames — pipeline operator R6 (SURVEY.md §2.B).
 
-The whole §2.A engine runs inside ``mapInArrow``: JVM → Python crosses once
-per Arrow batch (never per row — BASELINE.json input_hint: "vectorized
-pandas/Arrow UDFs (no per-row Python)"). Inside a batch the per-document
-hot loop is pure-Python engine calls (tokenize → arena DOM → extract), the
-Python analog of the reference's single-pass parse (src/html/parser.d
-[recalled] — SURVEY.md §3.1).
+Each operator pairs an output DDL with a kernel: per-slice Python that runs
+the §2.A engine (tokenize → arena DOM → extract, the Python analog of the
+reference's single-pass parse, src/html/parser.d [recalled] — SURVEY.md
+§3.1) over plain lists of documents. ``functions/docmap.map_docs`` runs
+every kernel inside one ``mapInArrow``, so JVM → Python crosses once per
+Arrow batch, never per row (BASELINE.json input_hint: "vectorized
+pandas/Arrow UDFs (no per-row Python)"), and owns the rest of the crossing:
+partition ids, byte-budget slicing of oversized blobs (R4), pass-through
+columns, the never-raise guard and batch assembly.
 
-Oversized-blob handling (R4): incoming record batches are re-chunked by a
-byte budget, so a batch containing several ~MiB html blobs is processed and
-emitted in smaller slices — bounds peak memory per worker regardless of
-``spark.sql.execution.arrow.maxRecordsPerBatch`` and keeps output batches
-streaming even when one input batch is huge.
+The extraction kernel calls the engine through this module's globals
+(``to_utf8``, ``parse_document``, ``main_text``, ``element_span_columns``),
+looked up at call time, so perfbench's udfs probe can time each engine call
+by wrapping them from outside.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pyarrow as pa
 
@@ -32,21 +32,14 @@ from htmld_spark.engine.extract import (
     element_span_columns,
     main_text,
 )
-
-SPAN_TYPE = pa.struct(
-    [
-        ("node_id", pa.int32()),
-        ("parent_id", pa.int32()),
-        ("tag", pa.string()),
-        ("start", pa.int64()),
-        ("end", pa.int64()),
-        ("text_start", pa.int64()),
-        ("text_end", pa.int64()),
-    ]
+from htmld_spark.functions.docmap import (
+    DEFAULT_BYTE_BUDGET,
+    ROW,
+    arrow_map,
+    arrow_schema,
+    map_docs,
 )
-SPANS_TYPE = pa.list_(SPAN_TYPE)
 
-# Spark-side schemas (DDL) — keep in sync with the arrow builders below.
 EXTRACT_SCHEMA = (
     "url string, warc_ts timestamp, lang string, text string, "
     "n_bytes bigint, n_nodes int, n_spans int, parse_ok boolean, "
@@ -59,183 +52,88 @@ EXTRACT_SCHEMA_NO_SPANS = (
     "n_bytes bigint, n_nodes int, n_spans int, parse_ok boolean, "
     "exec_partition_id int"
 )
+SPANS_TYPE = arrow_schema(EXTRACT_SCHEMA).field("spans").type
 
-DEFAULT_BYTE_BUDGET = 32 << 20  # 32 MiB of raw html per processing slice
-
-
-def _slice_offsets(html_col, byte_budget: int) -> list[tuple[int, int]]:
-    """Split a batch's rows into [start, end) slices whose summed html bytes
-    stay under ``byte_budget`` (always ≥1 row per slice). Lengths come from
-    one vectorized kernel — no per-row Arrow scalar objects."""
-    import pyarrow.compute as pc
-
-    lens = pc.binary_length(html_col).fill_null(0).to_pylist()
-    n = len(lens)
-    slices = []
-    start = 0
-    acc = 0
-    for i, ln in enumerate(lens):
-        if acc + ln > byte_budget and i > start:
-            slices.append((start, i))
-            start = i
-            acc = 0
-        acc += ln
-    if start < n:
-        slices.append((start, n))
-    return slices
+# pages-shaped outputs carry these input columns through (nulls if absent)
+PAGE_KEEP = ("url", "warc_ts", "lang")
 
 
-def make_extract_fn(with_spans: bool = True, byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Build the mapInArrow function. Input batches must carry at least
-    (url, html); (warc_ts, lang) pass through when present."""
+def _extract_kernel(with_spans: bool):
+    span_fields = list(SPANS_TYPE.value_type)
 
-    def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        try:
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            partition_id = ctx.partitionId() if ctx is not None else -1
-        except Exception:  # pragma: no cover - non-Spark context
-            partition_id = -1
-
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            html_col = batch.column(names.index("html"))
-            ts_col = batch.column(names.index("warc_ts")) if "warc_ts" in names else None
-            lang_col = batch.column(names.index("lang")) if "lang" in names else None
-            ct_col = (
-                batch.column(names.index("content_type"))
-                if "content_type" in names
-                else None
+    def extract(raws, content_types):
+        # X11: charset sniff + UTF-8 normalization BEFORE the parse
+        # (engine/encoding.py — zero-copy when the input already validates
+        # as UTF-8; an HTTP Content-Type charset, when the input carries a
+        # content_type column, outranks the meta prescan). Spans index the
+        # normalized bytes.
+        if content_types is None:
+            labels = [None] * len(raws)
+        else:
+            labels = [content_type_charset(ct) for ct in content_types]
+        texts, n_bytes, n_nodes, n_spans = [], [], [], []
+        # columnar span accumulation: 7 flat columns + list offsets
+        span_cols: tuple[list, ...] = ([], [], [], [], [], [], [])
+        offsets = [0]
+        for raw, label in zip(raws, labels):
+            raw = raw or b""
+            doc = parse_document(to_utf8(raw, label)[0])
+            texts.append(main_text(doc).decode("utf-8", "replace"))
+            n_bytes.append(len(raw))
+            n_nodes.append(doc.n_nodes())
+            if with_spans:
+                n_spans.append(element_span_columns(doc, span_cols))
+                offsets.append(len(span_cols[0]))
+            else:
+                n_spans.append(0)
+        out = {
+            "text": texts,
+            "n_bytes": n_bytes,
+            "n_nodes": n_nodes,
+            "n_spans": n_spans,
+            "parse_ok": [True] * len(raws),
+        }
+        if with_spans:
+            out["spans"] = pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                pa.StructArray.from_arrays(
+                    [pa.array(c, f.type) for c, f in zip(span_cols, span_fields)],
+                    fields=span_fields,
+                ),
+                type=SPANS_TYPE,
             )
+        return out
 
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                texts: list[str] = []
-                n_bytes: list[int] = []
-                n_nodes: list[int] = []
-                n_spans: list[int] = []
-                ok: list[bool] = []
-                # columnar span accumulation: 7 flat columns + list offsets
-                span_cols: tuple[list, ...] = ([], [], [], [], [], [], [])
-                span_offsets: list[int] = [0]
-                # one bulk copy per slice — never per-row Arrow scalars
-                raws = html_col.slice(lo, hi - lo).to_pylist()
-                cts = (
-                    ct_col.slice(lo, hi - lo).to_pylist()
-                    if ct_col is not None
-                    else None
-                )
-                for ri, raw in enumerate(raws):
-                    if raw is None:
-                        raw = b""
-                    try:
-                        # X11: charset sniff + UTF-8 normalization BEFORE
-                        # the parse (engine/encoding.py — zero-copy when
-                        # the input already validates as UTF-8; an HTTP
-                        # Content-Type charset, when the input carries a
-                        # content_type column, outranks the meta prescan).
-                        # Spans index the normalized bytes.
-                        label = (
-                            content_type_charset(cts[ri])
-                            if cts is not None
-                            else None
-                        )
-                        utf8, _codec, _src = to_utf8(raw, label)
-                        doc = parse_document(utf8)
-                        txt = main_text(doc).decode("utf-8", "replace")
-                        ns = (
-                            element_span_columns(doc, span_cols)
-                            if with_spans
-                            else 0
-                        )
-                        texts.append(txt)
-                        n_bytes.append(len(raw))
-                        n_nodes.append(doc.n_nodes())
-                        n_spans.append(ns)
-                        ok.append(True)
-                    except Exception:
-                        # engine contract is never-throw; this is a belt-and-
-                        # braces guard so one poison doc can't kill the task
-                        texts.append("")
-                        n_bytes.append(len(raw))
-                        n_nodes.append(0)
-                        n_spans.append(0)
-                        ok.append(False)
-                    if with_spans:
-                        span_offsets.append(len(span_cols[0]))
+    return extract
 
-                arrays = [
-                    url_col.slice(lo, hi - lo),
-                    (
-                        ts_col.slice(lo, hi - lo)
-                        if ts_col is not None
-                        else pa.nulls(hi - lo, pa.timestamp("us"))
-                    ),
-                    (
-                        lang_col.slice(lo, hi - lo)
-                        if lang_col is not None
-                        else pa.nulls(hi - lo, pa.string())
-                    ),
-                    pa.array(texts, pa.string()),
-                    pa.array(n_bytes, pa.int64()),
-                    pa.array(n_nodes, pa.int32()),
-                    pa.array(n_spans, pa.int32()),
-                    pa.array(ok, pa.bool_()),
-                ]
-                fields = [
-                    ("url", arrays[0].type),
-                    ("warc_ts", arrays[1].type),
-                    ("lang", arrays[2].type),
-                    ("text", pa.string()),
-                    ("n_bytes", pa.int64()),
-                    ("n_nodes", pa.int32()),
-                    ("n_spans", pa.int32()),
-                    ("parse_ok", pa.bool_()),
-                ]
-                if with_spans:
-                    struct = pa.StructArray.from_arrays(
-                        [
-                            pa.array(span_cols[0], pa.int32()),
-                            pa.array(span_cols[1], pa.int32()),
-                            pa.array(span_cols[2], pa.string()),
-                            pa.array(span_cols[3], pa.int64()),
-                            pa.array(span_cols[4], pa.int64()),
-                            pa.array(span_cols[5], pa.int64()),
-                            pa.array(span_cols[6], pa.int64()),
-                        ],
-                        fields=list(SPAN_TYPE),
-                    )
-                    arrays.append(
-                        pa.ListArray.from_arrays(
-                            pa.array(span_offsets, pa.int32()), struct
-                        )
-                    )
-                    fields.append(("spans", SPANS_TYPE))
-                arrays.append(pa.array([partition_id] * (hi - lo), pa.int32()))
-                fields.append(("exec_partition_id", pa.int32()))
-                yield pa.RecordBatch.from_arrays(
-                    arrays, schema=pa.schema(fields)
-                )
 
-    return extract_batches
+def _extract_spec(with_spans: bool) -> dict:
+    return {
+        "kernel": _extract_kernel(with_spans),
+        "out_ddl": EXTRACT_SCHEMA if with_spans else EXTRACT_SCHEMA_NO_SPANS,
+        "args": ("html", "content_type"),
+        "keep": PAGE_KEEP,
+        "blob": "html",
+    }
+
+
+def make_extract_fn(with_spans: bool = True):
+    """The ``mapInArrow`` callable behind ``extract_df``: Arrow batches of
+    (url, html[, warc_ts, lang, content_type]) → extracted batches. Runs
+    off Spark as well, with ``exec_partition_id`` -1."""
+    return arrow_map(**_extract_spec(with_spans))
 
 
 def extract_df(df, with_spans: bool = True, byte_budget: int = DEFAULT_BYTE_BUDGET):
     """Apply the extraction engine to a pages DataFrame (url, html[, warc_ts,
-    lang]) → extracted DataFrame. The single JVM↔Python boundary of the
-    pipeline (SURVEY.md §3.4)."""
-    schema = EXTRACT_SCHEMA if with_spans else EXTRACT_SCHEMA_NO_SPANS
-    return df.mapInArrow(make_extract_fn(with_spans, byte_budget), schema)
+    lang, content_type]) → extracted DataFrame. The single JVM↔Python
+    boundary of the pipeline (SURVEY.md §3.4)."""
+    return map_docs(df, **_extract_spec(with_spans), byte_budget=byte_budget)
 
 
-def make_select_count_fn(
-    selectors: list[str],
-    names: list[str] | None = None,
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
-):
-    """mapInArrow function counting CSS-selector matches per document
-    (S18 surfaced relationally). Selectors are compiled ONCE here on the
+def select_count_df(df, selectors: list[str], names: list[str] | None = None):
+    """Count CSS-selector matches per document (S18 surfaced relationally):
+    (url[, warc_ts], <name> int...). Selectors are compiled ONCE here on the
     driver and shipped in the closure — compile-once/match-many, the analog
     of the reference's Selector.parse reuse (SURVEY.md §3.2). ``warc_ts``
     passes through when present (duplicate urls need it as a tiebreaker)."""
@@ -245,46 +143,21 @@ def make_select_count_fn(
         names = [f"c{i}" for i in range(len(selectors))]
     compiled = [(n, compile_selector(s)) for n, s in zip(names, selectors)]
 
-    def count_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            bnames = batch.schema.names
-            url_col = batch.column(bnames.index("url"))
-            html_col = batch.column(bnames.index("html"))
-            ts_col = batch.column(bnames.index("warc_ts")) if "warc_ts" in bnames else None
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                counts: list[list[int]] = [[] for _ in compiled]
-                for raw in html_col.slice(lo, hi - lo).to_pylist():
-                    doc = parse_document(to_utf8(raw or b"")[0])
-                    for slot, (_, sel) in enumerate(compiled):
-                        counts[slot].append(
-                            sum(1 for _ in query_select_all(doc, sel))
-                        )
-                arrays = [url_col.slice(lo, hi - lo)]
-                fields = [("url", arrays[0].type)]
-                if ts_col is not None:
-                    arrays.append(ts_col.slice(lo, hi - lo))
-                    fields.append(("warc_ts", arrays[-1].type))
-                arrays += [pa.array(c, pa.int32()) for c in counts]
-                fields += [(name, pa.int32()) for name, _ in compiled]
-                yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+    def count(raws):
+        counts = {n: [] for n, _ in compiled}
+        for raw in raws:
+            doc = parse_document(to_utf8(raw or b"")[0])
+            for n, sel in compiled:
+                counts[n].append(sum(1 for _ in query_select_all(doc, sel)))
+        return counts
 
-    return count_batches
-
-
-def select_count_df(
-    df,
-    selectors: list[str],
-    names: list[str] | None = None,
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
-):
-    """Count selector matches per document: (url[, warc_ts], <name> int...)."""
-    if names is None:
-        names = [f"c{i}" for i in range(len(selectors))]
     cols = "url string, "
     if "warc_ts" in df.columns:
         cols += "warc_ts timestamp, "
     schema = cols + ", ".join(f"{n} int" for n in names)
-    return df.mapInArrow(make_select_count_fn(selectors, names, byte_budget), schema)
+    return map_docs(
+        df, count, schema, args=("html",), keep=("url", "warc_ts"), blob="html"
+    )
 
 
 SELECT_EXTRACT_SCHEMA = (
@@ -297,92 +170,56 @@ SELECT_EXTRACT_SCHEMA_TS = (
 )
 
 
-def make_select_extract_fn(
-    selectors: list[str],
-    max_matches: int = 20,
-    with_html: bool = False,
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
-):
-    """The reference's primary per-document workflow — querySelectorAll →
-    innerText/outerHTML (SURVEY.md §3.2/§3.3) — surfaced relationally: one
-    output row per (document, selector) with the matched texts (and
-    optionally markup). Selectors compile once on the driver."""
-    from htmld_spark.engine.extract import inner_text, outer_html
-    from htmld_spark.engine.selector import compile_selector, query_select_all
-
-    compiled = [(s, compile_selector(s)) for s in selectors]
-
-    def select_extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            html_col = batch.column(names.index("html"))
-            ts_col = batch.column(names.index("warc_ts")) if "warc_ts" in names else None
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                urls = url_col.slice(lo, hi - lo).to_pylist()
-                raws = html_col.slice(lo, hi - lo).to_pylist()
-                tss = ts_col.slice(lo, hi - lo) if ts_col is not None else None
-                o_url, o_ts, o_sel, o_n, o_texts, o_htmls = [], [], [], [], [], []
-                for ri, (url, raw) in enumerate(zip(urls, raws)):
-                    doc = parse_document(to_utf8(raw or b"")[0])
-                    for sel_str, sel in compiled:
-                        nodes = []
-                        for nid in query_select_all(doc, sel):
-                            nodes.append(nid)
-                            if len(nodes) >= max_matches:
-                                break
-                        o_url.append(url)
-                        if tss is not None:
-                            o_ts.append(ri)
-                        o_sel.append(sel_str)
-                        o_n.append(len(nodes))
-                        o_texts.append(
-                            [
-                                inner_text(doc, n).decode("utf-8", "replace")
-                                for n in nodes
-                            ]
-                        )
-                        o_htmls.append(
-                            [
-                                outer_html(doc, n).decode("utf-8", "replace")
-                                for n in nodes
-                            ]
-                            if with_html
-                            else None
-                        )
-                arrays = [pa.array(o_url, pa.string())]
-                out_names = ["url"]
-                if tss is not None:
-                    arrays.append(tss.take(pa.array(o_ts, pa.int32())))
-                    out_names.append("warc_ts")
-                arrays += [
-                    pa.array(o_sel, pa.string()),
-                    pa.array(o_n, pa.int32()),
-                    pa.array(o_texts, pa.list_(pa.string())),
-                    pa.array(o_htmls, pa.list_(pa.string())),
-                ]
-                out_names += ["selector", "n_matches", "texts", "htmls"]
-                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return select_extract
-
-
 def select_extract_df(
     df,
     selectors: list[str],
     max_matches: int = 20,
     with_html: bool = False,
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
 ):
-    """querySelectorAll + extract over a pages DataFrame: one row per
-    (url[, warc_ts], selector) with matched texts (and markup when
-    ``with_html``)."""
+    """The reference's primary per-document workflow — querySelectorAll →
+    innerText/outerHTML (SURVEY.md §3.2/§3.3) — surfaced relationally over a
+    pages DataFrame: one row per (url[, warc_ts], selector) with the first
+    ``max_matches`` matched texts (and markup when ``with_html``).
+    Selectors compile once on the driver."""
+    from htmld_spark.engine.extract import inner_text, outer_html
+    from htmld_spark.engine.selector import compile_selector, query_select_all
+
+    compiled = [(s, compile_selector(s)) for s in selectors]
+
+    def select(raws):
+        o_row, o_sel, o_n, o_texts, o_htmls = [], [], [], [], []
+        for ri, raw in enumerate(raws):
+            doc = parse_document(to_utf8(raw or b"")[0])
+            for sel_str, sel in compiled:
+                nodes = []
+                for nid in query_select_all(doc, sel):
+                    nodes.append(nid)
+                    if len(nodes) >= max_matches:
+                        break
+                o_row.append(ri)
+                o_sel.append(sel_str)
+                o_n.append(len(nodes))
+                o_texts.append(
+                    [inner_text(doc, n).decode("utf-8", "replace") for n in nodes]
+                )
+                o_htmls.append(
+                    [outer_html(doc, n).decode("utf-8", "replace") for n in nodes]
+                    if with_html
+                    else None
+                )
+        return {
+            ROW: o_row,
+            "selector": o_sel,
+            "n_matches": o_n,
+            "texts": o_texts,
+            "htmls": o_htmls,
+        }
+
     schema = (
         SELECT_EXTRACT_SCHEMA_TS if "warc_ts" in df.columns else SELECT_EXTRACT_SCHEMA
     )
-    return df.mapInArrow(
-        make_select_extract_fn(selectors, max_matches, with_html, byte_budget),
-        schema,
+    return map_docs(
+        df, select, schema, args=("html",), keep=("url", "warc_ts"), blob="html"
     )
 
 
@@ -397,131 +234,50 @@ ENGINE_META = {
 PDF_EXTRACT_SCHEMA = (
     "pdf_id bigint, text string, n_pages int, n_bytes bigint, parse_ok boolean"
 )
-
-
-def make_pdf_extract_fn(
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
-    id_col: str = "pdf_id",
-    data_col: str = "pdf",
-):
-    """mapInArrow kernel for the PDF leg of the extraction tier
-    (engine/pdf.py — the north rule's "PDF/layout parse"). Same shape as
-    the HTML kernel: one JVM↔Python crossing per Arrow batch, byte-budget
-    re-chunking for oversized blobs, never-throw per document."""
-    from htmld_spark.engine.pdf import extract_pdf
-
-    def pdf_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            id_arr = batch.column(names.index(id_col))
-            pdf_col = batch.column(names.index(data_col))
-            for lo, hi in _slice_offsets(pdf_col, byte_budget):
-                raws = pdf_col.slice(lo, hi - lo).to_pylist()
-                texts: list[str] = []
-                n_pages: list[int] = []
-                n_bytes: list[int] = []
-                ok: list[bool] = []
-                for raw in raws:
-                    raw = raw or b""
-                    txt, np_ = extract_pdf(raw)
-                    texts.append(txt)
-                    n_pages.append(np_)
-                    n_bytes.append(len(raw))
-                    ok.append(np_ > 0)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        id_arr.slice(lo, hi - lo),
-                        pa.array(texts, pa.string()),
-                        pa.array(n_pages, pa.int32()),
-                        pa.array(n_bytes, pa.int64()),
-                        pa.array(ok, pa.bool_()),
-                    ],
-                    names=[id_col, "text", "n_pages", "n_bytes", "parse_ok"],
-                )
-
-    return pdf_batches
-
-
-def extract_pdf_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Apply the PDF extraction engine to a (pdf_id, pdf) DataFrame →
-    (pdf_id, text, n_pages, n_bytes, parse_ok). One MapInArrow crossing,
-    exactly like the HTML ``extract_df``."""
-    return df.mapInArrow(make_pdf_extract_fn(byte_budget), PDF_EXTRACT_SCHEMA)
-
-
 PDF_PAGES_SCHEMA = (
     "url string, warc_ts timestamp, lang string, text string, "
     "n_bytes bigint, n_pages int, parse_ok boolean, exec_partition_id int"
 )
 
 
-def make_pdf_pages_fn(byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Pages-shaped PDF kernel — the curation-pipeline twin of
-    ``make_extract_fn``: input (url, pdf[, warc_ts, lang]), passthrough
-    conventions identical to the HTML kernel, so ``curate(source='pdf')``
-    drops into the same downstream plan."""
+def _pdf_kernel(raws):
+    """The PDF leg of the extraction tier (engine/pdf.py — the north rule's
+    "PDF/layout parse"); a document parses when it yields ≥1 page."""
     from htmld_spark.engine.pdf import extract_pdf
 
-    def pdf_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        try:
-            from pyspark import TaskContext
+    texts, n_pages, n_bytes = [], [], []
+    for raw in raws:
+        raw = raw or b""
+        txt, np_ = extract_pdf(raw)
+        texts.append(txt)
+        n_pages.append(np_)
+        n_bytes.append(len(raw))
+    return {
+        "text": texts,
+        "n_pages": n_pages,
+        "n_bytes": n_bytes,
+        "parse_ok": [n > 0 for n in n_pages],
+    }
 
-            ctx = TaskContext.get()
-            partition_id = ctx.partitionId() if ctx is not None else -1
-        except Exception:  # pragma: no cover - non-Spark context
-            partition_id = -1
 
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            pdf_col = batch.column(names.index("pdf"))
-            ts_col = batch.column(names.index("warc_ts")) if "warc_ts" in names else None
-            lang_col = batch.column(names.index("lang")) if "lang" in names else None
-            for lo, hi in _slice_offsets(pdf_col, byte_budget):
-                raws = pdf_col.slice(lo, hi - lo).to_pylist()
-                texts: list[str] = []
-                n_pages: list[int] = []
-                n_bytes: list[int] = []
-                ok: list[bool] = []
-                for raw in raws:
-                    raw = raw or b""
-                    txt, np_ = extract_pdf(raw)
-                    texts.append(txt)
-                    n_pages.append(np_)
-                    n_bytes.append(len(raw))
-                    ok.append(np_ > 0)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        url_col.slice(lo, hi - lo),
-                        (
-                            ts_col.slice(lo, hi - lo)
-                            if ts_col is not None
-                            else pa.nulls(hi - lo, pa.timestamp("us"))
-                        ),
-                        (
-                            lang_col.slice(lo, hi - lo)
-                            if lang_col is not None
-                            else pa.nulls(hi - lo, pa.string())
-                        ),
-                        pa.array(texts, pa.string()),
-                        pa.array(n_bytes, pa.int64()),
-                        pa.array(n_pages, pa.int32()),
-                        pa.array(ok, pa.bool_()),
-                        pa.array([partition_id] * (hi - lo), pa.int32()),
-                    ],
-                    names=[
-                        "url", "warc_ts", "lang", "text", "n_bytes",
-                        "n_pages", "parse_ok", "exec_partition_id",
-                    ],
-                )
-
-    return pdf_batches
+def extract_pdf_df(df):
+    """Apply the PDF extraction engine to a (pdf_id, pdf) DataFrame →
+    (pdf_id, text, n_pages, n_bytes, parse_ok). One MapInArrow crossing,
+    exactly like the HTML ``extract_df``."""
+    return map_docs(
+        df, _pdf_kernel, PDF_EXTRACT_SCHEMA, args=("pdf",), keep=("pdf_id",),
+        blob="pdf",
+    )
 
 
 def extract_pdf_pages_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
     """Apply the PDF engine to a (url, pdf[, warc_ts, lang]) pages frame →
-    the HTML kernel's passthrough shape. One MapInArrow crossing."""
-    return df.mapInArrow(make_pdf_pages_fn(byte_budget), PDF_PAGES_SCHEMA)
+    the HTML kernel's pass-through shape, so ``curate(source='pdf')`` drops
+    into the same downstream plan. One MapInArrow crossing."""
+    return map_docs(
+        df, _pdf_kernel, PDF_PAGES_SCHEMA, args=("pdf",), keep=PAGE_KEEP,
+        blob="pdf", byte_budget=byte_budget,
+    )
 
 
 PDF_INFO_SCHEMA = (
@@ -530,37 +286,28 @@ PDF_INFO_SCHEMA = (
 )
 
 
-def pdf_info_df(df, id_col: str = "pdf_id", data_col: str = "pdf"):
+def pdf_info_df(df):
     """Document-metadata extraction (engine/pdf.pdf_info_ex — trailer
-    /Info with a keyed-dict fallback, one parse per doc): (id, pdf) →
-    (id, title, producer, creation_date, encrypted), nulls where absent.
+    /Info with a keyed-dict fallback, one parse per doc): (pdf_id, pdf) →
+    (pdf_id, title, producer, creation_date, encrypted), nulls where absent.
     Encrypted documents (standard security handler, §7.6) report
     encrypted=true with null metadata — their Info strings are
     ciphertext, and mojibake must not enter the corpus. One MapInArrow
     crossing."""
     from htmld_spark.engine.pdf import pdf_info_ex
 
-    def info_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            id_arr = batch.column(names.index(id_col))
-            raws = batch.column(names.index(data_col)).to_pylist()
-            pairs = [pdf_info_ex(r or b"") for r in raws]
-            infos = [p[0] for p in pairs]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    id_arr,
-                    pa.array([x.get("Title") for x in infos], pa.string()),
-                    pa.array([x.get("Producer") for x in infos], pa.string()),
-                    pa.array(
-                        [x.get("CreationDate") for x in infos], pa.string()
-                    ),
-                    pa.array([p[1] for p in pairs], pa.bool_()),
-                ],
-                names=[id_col, "title", "producer", "creation_date", "encrypted"],
-            )
+    def info(raws):
+        pairs = [pdf_info_ex(r or b"") for r in raws]
+        return {
+            "title": [p[0].get("Title") for p in pairs],
+            "producer": [p[0].get("Producer") for p in pairs],
+            "creation_date": [p[0].get("CreationDate") for p in pairs],
+            "encrypted": [p[1] for p in pairs],
+        }
 
-    return df.mapInArrow(info_batches, PDF_INFO_SCHEMA)
+    return map_docs(
+        df, info, PDF_INFO_SCHEMA, args=("pdf",), keep=("pdf_id",), blob="pdf"
+    )
 
 
 LINKS_SCHEMA = (
@@ -569,74 +316,36 @@ LINKS_SCHEMA = (
 )
 
 
-def make_links_fn(byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """mapInArrow kernel for outlink extraction (engine/links.py): input
-    (url, html[, warc_ts]) → one links array per page in document order,
-    plus the parallel anchor-text array (links[i] ↔ anchor_texts[i] —
-    the retrieval-training pair view). Same batching discipline as the
-    HTML extraction kernel (byte-budget slices so one batch of large
-    pages can't blow worker memory)."""
-    from htmld_spark.engine import parse_document
+def _links_kernel(urls, raws):
     from htmld_spark.engine.links import extract_links_with_text
 
-    def link_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            html_col = batch.column(names.index("html"))
-            ts_col = (
-                batch.column(names.index("warc_ts"))
-                if "warc_ts" in names
-                else None
-            )
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                raws = html_col.slice(lo, hi - lo).to_pylist()
-                urls = url_col.slice(lo, hi - lo).to_pylist()
-                links: list[list[str]] = []
-                texts: list[list[str]] = []
-                ok: list[bool] = []
-                for u, raw in zip(urls, raws):
-                    raw = raw or b""
-                    try:
-                        pairs = extract_links_with_text(
-                            parse_document(to_utf8(raw)[0]), u or ""
-                        )
-                        links.append([p[0] for p in pairs])
-                        texts.append([p[1] for p in pairs])
-                        ok.append(True)
-                    except MemoryError:  # never-raise backstop
-                        links.append([])
-                        texts.append([])
-                        ok.append(False)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        url_col.slice(lo, hi - lo),
-                        (
-                            ts_col.slice(lo, hi - lo)
-                            if ts_col is not None
-                            else pa.nulls(hi - lo, pa.timestamp("us"))
-                        ),
-                        pa.array(links, pa.list_(pa.string())),
-                        pa.array(texts, pa.list_(pa.string())),
-                        pa.array([len(x) for x in links], pa.int32()),
-                        pa.array(ok, pa.bool_()),
-                    ],
-                    names=[
-                        "url", "warc_ts", "links", "anchor_texts",
-                        "n_links", "parse_ok",
-                    ],
-                )
-
-    return link_batches
+    links, texts = [], []
+    for u, raw in zip(urls, raws):
+        pairs = extract_links_with_text(
+            parse_document(to_utf8(raw or b"")[0]), u or ""
+        )
+        links.append([p[0] for p in pairs])
+        texts.append([p[1] for p in pairs])
+    return {
+        "links": links,
+        "anchor_texts": texts,
+        "n_links": [len(x) for x in links],
+        "parse_ok": [True] * len(links),
+    }
 
 
-def extract_links_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Outlinks of a pages frame: (url, html[, warc_ts]) → (url, warc_ts,
-    links, anchor_texts, n_links, parse_ok). ONE MapInArrow crossing;
-    downstream frontier policy (dedup, robots, host budgets) and
+def extract_links_df(df):
+    """Outlinks of a pages frame (engine/links.py): (url, html[, warc_ts])
+    → (url, warc_ts, links, anchor_texts, n_links, parse_ok), links in
+    document order plus the parallel anchor-text array (links[i] ↔
+    anchor_texts[i] — the retrieval-training pair view). ONE MapInArrow
+    crossing; downstream frontier policy (dedup, robots, host budgets) and
     anchor-pair harvesting compose on the array columns with ordinary
     relational ops (arrays_zip + posexplode stay JVM-side)."""
-    return df.mapInArrow(make_links_fn(byte_budget), LINKS_SCHEMA)
+    return map_docs(
+        df, _links_kernel, LINKS_SCHEMA, args=("url", "html"),
+        keep=("url", "warc_ts"), blob="html",
+    )
 
 
 # --- X10: page-metadata extraction ------------------------------------
@@ -647,99 +356,49 @@ META_SCHEMA = (
     "charset string, og_props array<string>, og_values array<string>, "
     "parse_ok boolean"
 )
-
-_META_NULLS = {
-    "title": None, "description": None, "meta_robots": None,
-    "canonical_url": None, "lang": None, "charset": None,
-    "og_props": [], "og_values": [],
-}
+_META_FIELDS = (
+    "title", "description", "meta_robots", "canonical_url", "lang", "charset",
+    "og_props", "og_values",
+)
 
 
-def make_meta_fn(byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """mapInArrow kernel for page-metadata extraction (engine/meta.py):
-    input (url, html[, warc_ts]) → one metadata record per page (title,
-    description, robots consent, canonical url, lang, charset, the
-    OpenGraph card as parallel sorted arrays). Same batching discipline
-    as the HTML extraction kernel."""
-    from htmld_spark.engine import parse_document
+def _meta_kernel(urls, raws):
     from htmld_spark.engine.meta import extract_meta
 
-    fields = (
-        "title", "description", "meta_robots", "canonical_url",
-        "lang", "charset",
+    recs = [
+        extract_meta(parse_document(to_utf8(raw or b"")[0]), u or "")
+        for u, raw in zip(urls, raws)
+    ]
+    out = {f: [r[f] for r in recs] for f in _META_FIELDS}
+    out["parse_ok"] = [True] * len(recs)
+    return out
+
+
+def extract_meta_df(df):
+    """Page metadata of a pages frame (engine/meta.py): (url, html[,
+    warc_ts]) → one row per page with the pinned head-metadata record
+    (title, description, robots consent, canonical url, lang, charset, the
+    OpenGraph card as parallel sorted arrays). ONE MapInArrow crossing;
+    downstream policy (canonical-vs-L60 dedup keys, consent filtering on
+    meta_robots, language routing) composes with ordinary relational ops."""
+    return map_docs(
+        df, _meta_kernel, META_SCHEMA, args=("url", "html"),
+        keep=("url", "warc_ts"), blob="html",
     )
-
-    def meta_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            html_col = batch.column(names.index("html"))
-            ts_col = (
-                batch.column(names.index("warc_ts"))
-                if "warc_ts" in names
-                else None
-            )
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                raws = html_col.slice(lo, hi - lo).to_pylist()
-                urls = url_col.slice(lo, hi - lo).to_pylist()
-                recs: list[dict] = []
-                ok: list[bool] = []
-                for u, raw in zip(urls, raws):
-                    try:
-                        recs.append(
-                            extract_meta(
-                                parse_document(to_utf8(raw or b"")[0]),
-                                u or "",
-                            )
-                        )
-                        ok.append(True)
-                    except MemoryError:  # never-raise backstop
-                        recs.append(_META_NULLS)
-                        ok.append(False)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        url_col.slice(lo, hi - lo),
-                        (
-                            ts_col.slice(lo, hi - lo)
-                            if ts_col is not None
-                            else pa.nulls(hi - lo, pa.timestamp("us"))
-                        ),
-                        *(
-                            pa.array([r[f] for r in recs], pa.string())
-                            for f in fields
-                        ),
-                        pa.array(
-                            [r["og_props"] for r in recs],
-                            pa.list_(pa.string()),
-                        ),
-                        pa.array(
-                            [r["og_values"] for r in recs],
-                            pa.list_(pa.string()),
-                        ),
-                        pa.array(ok, pa.bool_()),
-                    ],
-                    names=[
-                        "url", "warc_ts", "title", "description",
-                        "meta_robots", "canonical_url", "lang", "charset",
-                        "og_props", "og_values", "parse_ok",
-                    ],
-                )
-
-    return meta_batches
-
-
-def extract_meta_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Page metadata of a pages frame: (url, html[, warc_ts]) → one row
-    per page with the pinned head-metadata record (engine/meta.py).
-    ONE MapInArrow crossing; downstream policy (canonical-vs-L60 dedup
-    keys, consent filtering on meta_robots, language routing) composes
-    with ordinary relational ops."""
-    return df.mapInArrow(make_meta_fn(byte_budget), META_SCHEMA)
 
 
 # --- X11: charset sniff census ------------------------------------------
 
 ENCODING_SCHEMA = "url string, encoding string, source string"
+
+
+def _sniff_kernel(raws, content_types):
+    if content_types is None:
+        labels = [None] * len(raws)
+    else:
+        labels = [content_type_charset(ct) for ct in content_types]
+    pairs = [sniff_encoding(r or b"", lab) for r, lab in zip(raws, labels)]
+    return {"encoding": [p[0] for p in pairs], "source": [p[1] for p in pairs]}
 
 
 def sniff_encoding_df(df):
@@ -751,35 +410,7 @@ def sniff_encoding_df(df):
     ``content_type`` column (WARC ingest) whose charset parameter
     resolves. ONE row-local MapInArrow crossing — the corpus
     encoding-mix report (GROUP BY encoding downstream stays JVM-side)."""
-    in_cols = ["url", "html"] + (
-        ["content_type"] if "content_type" in df.columns else []
+    return map_docs(
+        df, _sniff_kernel, ENCODING_SCHEMA, args=("html", "content_type"),
+        keep=("url",), blob="html",
     )
-
-    def sniff_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            raws = batch.column(names.index("html")).to_pylist()
-            if "content_type" in names:
-                labels = [
-                    content_type_charset(ct)
-                    for ct in batch.column(
-                        names.index("content_type")
-                    ).to_pylist()
-                ]
-            else:
-                labels = [None] * len(raws)
-            pairs = [
-                sniff_encoding(r or b"", lab)
-                for r, lab in zip(raws, labels)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    url_col,
-                    pa.array([p[0] for p in pairs], pa.string()),
-                    pa.array([p[1] for p in pairs], pa.string()),
-                ],
-                names=["url", "encoding", "source"],
-            )
-
-    return df.select(*in_cols).mapInArrow(sniff_batches, ENCODING_SCHEMA)

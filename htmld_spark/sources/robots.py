@@ -33,6 +33,8 @@ from __future__ import annotations
 
 import re
 
+from htmld_spark.functions.docmap import map_docs
+
 _RULE_RE = re.compile(rb"^[ \t]*([A-Za-z-]+)[ \t]*:[ \t]*([^#\r\n]*)")
 
 
@@ -150,29 +152,18 @@ def robots_directives_df(robots_df, agent: str = "*"):
     array<string>) for ``agent`` — the politeness inputs a frontier
     consumes (per-host fetch spacing; sitemap seeds). ONE mapInArrow
     over the already-slim robots frame; row-local, no shuffle."""
-    import pyarrow as pa
 
-    def directives(batches):
-        for batch in batches:
-            names = batch.schema.names
-            hosts = batch.column(names.index("host")).to_pylist()
-            txts = batch.column(names.index("robots")).to_pylist()
-            delays, maps = [], []
-            for t in txts:
-                d, s = parse_robots_directives(t, agent)
-                delays.append(d)
-                maps.append(s)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(hosts, pa.string()),
-                    pa.array(delays, pa.float64()),
-                    pa.array(maps, pa.list_(pa.string())),
-                ],
-                names=["host", "crawl_delay", "sitemaps"],
-            )
+    def directives(txts):
+        pairs = [parse_robots_directives(t, agent) for t in txts]
+        return {
+            "crawl_delay": [p[0] for p in pairs],
+            "sitemaps": [p[1] for p in pairs],
+        }
 
-    return robots_df.select("host", "robots").mapInArrow(
-        directives, "host string, crawl_delay double, sitemaps array<string>"
+    return map_docs(
+        robots_df, directives,
+        "host string, crawl_delay double, sitemaps array<string>",
+        args=("robots",), keep=("host",), blob="robots",
     )
 
 
@@ -276,7 +267,6 @@ def robots_filter(pages, robots_df, agent: str = "*", url_col: str = "url"):
     defeats ReuseExchange — CLAUDE.md plan-diamond rule); localCheckpoint
     such a frame before calling. NULL-url rows carry no verdict and PASS
     THROUGH (a null key never matches the anti join)."""
-    import pyarrow as pa
     from pyspark.sql import functions as F
 
     host = F.coalesce(
@@ -291,34 +281,29 @@ def robots_filter(pages, robots_df, agent: str = "*", url_col: str = "url"):
         "inner",
     )
 
-    def verdicts(batches):
-        cache: dict[str, list[tuple[bool, str]]] = {}
-        for batch in batches:
-            names = batch.schema.names
-            urls = batch.column(names.index(url_col)).to_pylist()
-            hosts = batch.column(names.index("_rb_host")).to_pylist()
-            txts = batch.column(names.index("_rb_txt")).to_pylist()
-            keep = []
-            for u, h, t in zip(urls, hosts, txts):
-                if t is None:
-                    keep.append(True)
-                    continue
-                rules = cache.get(h)
-                if rules is None:
-                    rules = rules_for_agent(parse_robots(t), agent)
-                    if len(cache) > 10_000:  # bound worker memory
-                        cache.clear()
-                    cache[h] = rules
-                keep.append(robots_allowed(rules, url_path(u or "")))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(names.index(url_col)),
-                 pa.array(keep, pa.bool_())],
-                names=[url_col, "_rb_keep"],
-            )
+    cache: dict[str, list[tuple[bool, str]]] = {}
 
-    schema = f"{url_col} string, _rb_keep boolean"
+    def verdicts(urls, hosts, txts):
+        keep = []
+        for u, h, t in zip(urls, hosts, txts):
+            if t is None:
+                keep.append(True)
+                continue
+            rules = cache.get(h)
+            if rules is None:
+                rules = rules_for_agent(parse_robots(t), agent)
+                if len(cache) > 10_000:  # bound worker memory
+                    cache.clear()
+                cache[h] = rules
+            keep.append(robots_allowed(rules, url_path(u or "")))
+        return {"_rb_keep": keep}
+
     blocked_urls = (
-        joined.mapInArrow(verdicts, schema)
+        map_docs(
+            joined, verdicts, f"{url_col} string, _rb_keep boolean",
+            args=(url_col, "_rb_host", "_rb_txt"), keep=(url_col,),
+            blob="_rb_txt",
+        )
         .filter(~F.col("_rb_keep"))
         .select(url_col)
         .localCheckpoint(eager=False)

@@ -49,6 +49,7 @@ import math
 from htmld_spark.engine import parse_document
 from htmld_spark.engine.extract import inner_text
 from htmld_spark.engine.links import _resolve
+from htmld_spark.functions.docmap import ROW, map_docs
 from htmld_spark.sources.warc import _gunzip_members
 
 _MAX_LOC = 2048
@@ -141,39 +142,21 @@ def sitemap_entries_df(df, url_col: str = "url", body_col: str = "body"):
     lastmod, changefreq, priority). ONE mapInArrow crossing over the
     slim two-column projection; kind='sitemap' rows feed the next fetch
     round (index files), kind='url' rows feed the frontier (L61)."""
-    import pyarrow as pa
+    from pyspark.sql import functions as F
 
-    def entries(batches):
-        for batch in batches:
-            names = batch.schema.names
-            urls = batch.column(names.index(url_col)).to_pylist()
-            bodies = batch.column(names.index(body_col)).to_pylist()
-            su, pos, kinds, locs, mods, cfs, prios = [], [], [], [], [], [], []
-            for u, b in zip(urls, bodies):
-                for i, (k, loc, lm, cf, pr) in enumerate(
-                    parse_sitemap(b, u or "")
-                ):
-                    su.append(u)
-                    pos.append(i)
-                    kinds.append(k)
-                    locs.append(loc)
-                    mods.append(lm)
-                    cfs.append(cf)
-                    prios.append(pr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(su, pa.string()),
-                    pa.array(pos, pa.int32()),
-                    pa.array(kinds, pa.string()),
-                    pa.array(locs, pa.string()),
-                    pa.array(mods, pa.string()),
-                    pa.array(cfs, pa.string()),
-                    pa.array(prios, pa.float64()),
-                ],
-                names=[
-                    "sitemap_url", "pos", "kind", "loc", "lastmod",
-                    "changefreq", "priority",
-                ],
-            )
+    def entries(urls, bodies):
+        out = {k: [] for k in (ROW, "pos", "kind", "loc", "lastmod",
+                               "changefreq", "priority")}
+        for ri, (u, b) in enumerate(zip(urls, bodies)):
+            for i, entry in enumerate(parse_sitemap(b, u or "")):
+                for slot, v in zip(out.values(), (ri, i, *entry)):
+                    slot.append(v)
+        return out
 
-    return df.select(url_col, body_col).mapInArrow(entries, SITEMAP_SCHEMA)
+    slim = df.select(
+        F.col(url_col).alias("sitemap_url"), F.col(body_col).alias("body")
+    )
+    return map_docs(
+        slim, entries, SITEMAP_SCHEMA, args=("sitemap_url", "body"),
+        keep=("sitemap_url",), blob="body",
+    )

@@ -42,6 +42,8 @@ from __future__ import annotations
 import zlib
 from datetime import datetime, timezone
 
+from htmld_spark.functions.docmap import ROW, map_docs
+
 _MAX_HEADER_BLOCK = 64 << 10  # a sane cap on one record's header block
 _MAX_BODY_BYTES = 64 << 20  # per-body inflate cap (truncate-and-salvage)
 _MAX_ARCHIVE_BYTES = 4 << 30  # whole-archive decompressed cap
@@ -289,41 +291,29 @@ PAGES_SCHEMA = (
 )
 
 
+def _warc_pages_kernel(blobs):
+    out = {k: [] for k in (ROW, "url", "warc_ts", "html", "content_type",
+                           "http_status", "redirect_location")}
+    for ri, blob in enumerate(blobs):
+        for row in warc_pages(blob or b""):
+            for slot, v in zip(out.values(), (ri, *row)):
+                slot.append(v)
+    return out
+
+
 def warc_pages_df(spark, path: str):
     """Read ``*.warc`` / ``*.warc.gz`` archives into the mandated pages
     shape: binaryFile scan (one task per archive file — the scan split IS
     the parallelism unit) → one mapInArrow parse. Shuffle nothing; feed
     the result straight to ``extract_df`` or ``curate()``."""
-    import pyarrow as pa
-
-    def parse_batches(batches):
-        for batch in batches:
-            names = batch.schema.names
-            paths = batch.column(names.index("path")).to_pylist()
-            contents = batch.column(names.index("content")).to_pylist()
-            cols = ([], [], [], [], [], [], [])
-            for p, blob in zip(paths, contents):
-                for row in warc_pages(blob or b""):
-                    for slot, v in zip(cols, (*row, p)):
-                        slot.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols[0], pa.string()),
-                    pa.array(cols[1], pa.timestamp("us")),
-                    pa.array(cols[2], pa.binary()),
-                    pa.array(cols[3], pa.string()),
-                    pa.array(cols[4], pa.int32()),
-                    pa.array(cols[5], pa.string()),
-                    pa.array(cols[6], pa.string()),
-                ],
-                names=[
-                    "url", "warc_ts", "html", "content_type",
-                    "http_status", "redirect_location", "warc_file",
-                ],
-            )
+    from pyspark.sql import functions as F
 
     raw = spark.read.format("binaryFile").load(path)
-    return raw.select("path", "content").mapInArrow(parse_batches, PAGES_SCHEMA)
+    return map_docs(
+        raw.select(F.col("path").alias("warc_file"), "content"),
+        _warc_pages_kernel, PAGES_SCHEMA, args=("content",),
+        keep=("warc_file",), blob="content",
+    )
 
 
 _HTML_MIMES = ("text/html", "application/xhtml+xml")
@@ -457,43 +447,36 @@ def wet_export(df, out_dir: str, url_col: str = "url",
 WET_SCHEMA = "url string, warc_ts timestamp, text string, warc_file string"
 
 
+def _wet_pages_kernel(blobs):
+    rows, urls, tss, texts = [], [], [], []
+    for ri, blob in enumerate(blobs):
+        try:
+            for headers, payload in iter_warc_records(blob or b""):
+                if headers.get("warc-type", "").lower() != "conversion":
+                    continue
+                url = headers.get("warc-target-uri")
+                if not url:
+                    continue
+                rows.append(ri)
+                urls.append(url)
+                tss.append(_warc_ts(headers.get("warc-date", "")))
+                texts.append(payload.decode("utf-8", "replace"))
+        except Exception:
+            continue
+    return {ROW: rows, "url": urls, "warc_ts": tss, "text": texts}
+
+
 def wet_pages_df(spark, path: str):
     """Read WET-style shards back: binaryFile scan → one mapInArrow over
     ``conversion`` records (same tolerant reader as the response path —
     member salvage, Content-Length resync). The inverse of
     ``wet_export``; text decodes as UTF-8 (that is what the records
     declare and what the exporter writes)."""
-    import pyarrow as pa
-
-    def parse_batches(batches):
-        for batch in batches:
-            names = batch.schema.names
-            paths = batch.column(names.index("path")).to_pylist()
-            contents = batch.column(names.index("content")).to_pylist()
-            urls, tss, texts, files = [], [], [], []
-            for p, blob in zip(paths, contents):
-                try:
-                    for headers, payload in iter_warc_records(blob or b""):
-                        if headers.get("warc-type", "").lower() != "conversion":
-                            continue
-                        url = headers.get("warc-target-uri")
-                        if not url:
-                            continue
-                        urls.append(url)
-                        tss.append(_warc_ts(headers.get("warc-date", "")))
-                        texts.append(payload.decode("utf-8", "replace"))
-                        files.append(p)
-                except Exception:
-                    continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, pa.string()),
-                    pa.array(tss, pa.timestamp("us")),
-                    pa.array(texts, pa.string()),
-                    pa.array(files, pa.string()),
-                ],
-                names=["url", "warc_ts", "text", "warc_file"],
-            )
+    from pyspark.sql import functions as F
 
     raw = spark.read.format("binaryFile").load(path)
-    return raw.select("path", "content").mapInArrow(parse_batches, WET_SCHEMA)
+    return map_docs(
+        raw.select(F.col("path").alias("warc_file"), "content"),
+        _wet_pages_kernel, WET_SCHEMA, args=("content",), keep=("warc_file",),
+        blob="content",
+    )

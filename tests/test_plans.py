@@ -149,6 +149,36 @@ def test_extraction_plan_has_single_python_stage(spark):
     assert p.count("MapInArrow") == 1
     assert "BatchEvalPython" not in p  # no row-at-a-time Python anywhere
 
+def test_row_map_crossings_go_through_the_driver():
+    """Every row-map Arrow crossing under htmld_spark/ runs through
+    functions/docmap.py; the only other mapInArrow is wet_export's
+    per-partition file sink. Source scan, so a hand-rolled batch loop
+    cannot grow back."""
+    import ast
+    import pathlib
+
+    import htmld_spark
+
+    crossing = (
+        "mapInArrow(", "RecordBatch.from_arrays", "_slice_offsets", "TaskContext",
+    )
+    pkg = pathlib.Path(htmld_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "docmap.py":
+            continue
+        src = path.read_text()
+        sink = "".join(
+            ast.get_source_segment(src, node)
+            for node in ast.parse(src).body
+            if isinstance(node, ast.FunctionDef) and node.name == "wet_export"
+        )
+        for token in crossing:
+            if src.count(token) != sink.count(token):
+                offenders.append(f"{path.relative_to(pkg)}: {token}")
+    assert not offenders, offenders
+
+
 def test_new_text_ops_stay_in_codegen(spark):
     """pii_scrub / url_normalize / paragraph_dedup / bigram_topk are pure
     JVM expressions — no Python eval nodes; the aggregating ones must show

@@ -97,6 +97,31 @@ def test_directives_never_raise():
         assert d is None and s == []
 
 
+def test_spark_directives_df_agent_and_star_groups(spark):
+    """robots_directives_df: one agent-specific and one '*' group — the
+    agent's own group wins for it, every other agent falls back to '*',
+    and sitemaps are file-wide for both."""
+    from htmld_spark.sources.robots import robots_directives_df
+
+    txt = (
+        b"User-agent: aibot\nCrawl-delay: 5\nDisallow: /p\n\n"
+        b"User-agent: *\nCrawl-delay: 2\n"
+        b"Sitemap: https://h.example/sitemap.xml\n"
+    )
+    robots = spark.createDataFrame(
+        [("h.example", txt), ("bare.example", None)],
+        "host string, robots binary",
+    )
+    maps = ["https://h.example/sitemap.xml"]
+    for agent, delay in (("aibot", 5.0), ("otherbot", 2.0)):
+        out = robots_directives_df(robots, agent=agent)
+        assert out.schema.simpleString() == (
+            "struct<host:string,crawl_delay:double,sitemaps:array<string>>"
+        )
+        got = {r.host: (r.crawl_delay, r.sitemaps) for r in out.collect()}
+        assert got == {"h.example": (delay, maps), "bare.example": (None, [])}
+
+
 def test_never_raises_and_url_path():
     for bad in (None, 5, b"", b"\x00\xff" * 200, "text", b"Allow: /orphan"):
         assert isinstance(parse_robots(bad), list)

@@ -201,7 +201,7 @@ def test_byte_budget_slicing():
     (pure function — no Spark needed)."""
     import pyarrow as pa
 
-    from htmld_spark.functions.udfs import _slice_offsets
+    from htmld_spark.functions.docmap import _slice_offsets
 
     small = [b"x" * 100] * 10
     big = [b"y" * 1000]
@@ -214,6 +214,147 @@ def test_byte_budget_slicing():
     for lo, hi in slices:
         size = sum(len(col[i].as_py()) for i in range(lo, hi))
         assert size <= 1000 or hi - lo == 1
+
+
+def _page_batches(n_rows: int = 12, chunk: int = 5):
+    import pyarrow as pa
+
+    from fixtures.gen_pages import gen_rows
+
+    cols = gen_rows(n_rows, seed=3)
+    table = pa.table(
+        {
+            "url": pa.array(cols["url"], pa.string()),
+            "warc_ts": pa.array(cols["warc_ts"], pa.timestamp("us", tz="UTC")),
+            "html": pa.array(cols["html"], pa.binary()),
+            "lang": pa.array(cols["lang"], pa.string()),
+        }
+    )
+    return table.to_batches(max_chunksize=chunk)
+
+
+@pytest.mark.parametrize("with_spans", [True, False])
+def test_make_extract_fn_off_spark_contract(monkeypatch, with_spans):
+    """The callable perfbench's udfs probe drives off Spark: pyarrow batches
+    of (url, warc_ts, html, lang) in, RecordBatches with
+    exec_partition_id -1 out, and the engine resolved through the udfs
+    module globals at call time — one parse_document per row."""
+    import pyarrow as pa
+
+    from htmld_spark.functions import udfs
+
+    calls = []
+    real = udfs.parse_document
+
+    def counting(data):
+        calls.append(1)
+        return real(data)
+
+    monkeypatch.setattr(udfs, "parse_document", counting)
+    batches = _page_batches()
+    n = sum(b.num_rows for b in batches)
+    out = list(udfs.make_extract_fn(with_spans=with_spans)(iter(batches)))
+    assert out and all(isinstance(b, pa.RecordBatch) for b in out)
+    table = pa.Table.from_batches(out)
+    assert table.num_rows == n and len(calls) == n
+    assert set(table.column("exec_partition_id").to_pylist()) == {-1}
+    assert all(table.column("parse_ok").to_pylist())
+    assert ("spans" in table.column_names) == with_spans
+    src = pa.Table.from_batches(batches)
+    for col in ("url", "warc_ts", "lang"):
+        assert table.column(col).to_pylist() == src.column(col).to_pylist()
+
+
+def test_driver_slicing_end_to_end():
+    """The row-map driver at a small byte budget: one output batch per
+    slice, and the concatenated rows equal the same batch run unsliced."""
+    import pyarrow as pa
+
+    from htmld_spark.functions.docmap import _slice_offsets, arrow_map
+
+    blobs = [b"a" * 700, b"b" * 10, b"c" * 900, None, b"d" * 600, b"e" * 5]
+    batch = pa.record_batch(
+        {"id": pa.array(range(len(blobs)), pa.int64()),
+         "blob": pa.array(blobs, pa.binary())}
+    )
+
+    def sizes(raws):
+        return {"n_bytes": [len(r or b"") for r in raws]}
+
+    def run(budget):
+        fn = arrow_map(
+            sizes, "id bigint, n_bytes bigint, exec_partition_id int",
+            args=("blob",), keep=("id",), blob="blob", byte_budget=budget,
+        )
+        return list(fn(iter([batch])))
+
+    sliced, whole = run(1000), run(1 << 20)
+    assert len(whole) == 1
+    assert len(sliced) == len(_slice_offsets(batch.column("blob"), 1000)) == 3
+    assert pa.Table.from_batches(sliced).equals(pa.Table.from_batches(whole))
+    assert whole[0].column("n_bytes").to_pylist() == [700, 10, 900, 0, 600, 5]
+
+
+def test_driver_guard_fails_only_the_raising_row(monkeypatch):
+    """A kernel whose output has parse_ok: a document whose engine call
+    raises gets parse_ok=false and nulls (spans included), its slice-mates
+    still extract, and the pass-through columns stay aligned."""
+    import pyarrow as pa
+
+    from htmld_spark.functions import udfs
+
+    real = udfs.parse_document
+
+    def poisoned(data):
+        if b"POISON" in data:
+            raise MemoryError("poison document")
+        return real(data)
+
+    monkeypatch.setattr(udfs, "parse_document", poisoned)
+    batch = pa.record_batch(
+        {
+            "url": ["u0", "u1", "u2"],
+            "html": [b"<p>a</p>", b"<p>POISON</p>", b"<p>c</p>"],
+        }
+    )
+    (out,) = list(udfs.make_extract_fn(with_spans=True)(iter([batch])))
+    got = out.to_pydict()
+    assert got["url"] == ["u0", "u1", "u2"]
+    assert got["text"] == ["a", None, "c"]
+    assert got["parse_ok"] == [True, False, True]
+    assert got["spans"][1] is None and got["spans"][0] and got["spans"][2]
+    assert got["warc_ts"] == got["lang"] == [None] * 3
+
+
+def test_extract_pdf_pages_df(spark):
+    """The pages-shaped PDF operator: text equals extract_pdf_df's on the
+    same bytes; warc_ts/lang pass through, or are null when absent."""
+    import datetime as dt
+
+    from fixtures.gen_pdfs import ensure_pdfs
+    from htmld_spark.functions.udfs import extract_pdf_df, extract_pdf_pages_df
+
+    pdfs = spark.read.parquet(ensure_pdfs()).select("pdf_id", "pdf").limit(40)
+    url = F.concat(F.lit("https://p.example/"), F.col("pdf_id").cast("string"))
+    expected = {
+        f"https://p.example/{r.pdf_id}": (r.text, r.n_pages, r.parse_ok)
+        for r in extract_pdf_df(pdfs).collect()
+    }
+    ts = dt.datetime(2024, 3, 1, 12, 0)
+    bare = pdfs.select(url.alias("url"), "pdf")
+    full = bare.withColumn("warc_ts", F.lit(ts)).withColumn("lang", F.lit("en"))
+    for frame, want_ts, want_lang in ((bare, None, None), (full, ts, "en")):
+        out = extract_pdf_pages_df(frame)
+        assert out.columns == [
+            "url", "warc_ts", "lang", "text", "n_bytes", "n_pages",
+            "parse_ok", "exec_partition_id",
+        ]
+        rows = out.collect()
+        assert len(rows) == len(expected)
+        for r in rows:
+            assert (r.text, r.n_pages, r.parse_ok) == expected[r.url]
+            assert (r.warc_ts, r.lang) == (want_ts, want_lang)
+            assert r.exec_partition_id >= 0
 
 
 def test_job_with_enrichment(spark, pages_path, tmp_path_factory):
