@@ -13,6 +13,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 ICEBERG_PREFIX = "iceberg:"
 
+# Parquet writer settings of every parquet output (codec: the session's
+# zstd). v2 data pages, and no dictionary on the span ids and offsets: the
+# v2 writer then delta-encodes those leaves (DELTA_BINARY_PACKED). Their
+# values are dense, near-sorted ints within a document, so a dictionary of
+# them is mostly unique values (measured 8.8 of 12.0 MB at 30k docs). The
+# low-cardinality ``parent_id`` and ``tag`` keep theirs.
+PARQUET_OPTIONS = {
+    "parquet.writer.version": "v2",
+    **{
+        f"parquet.enable.dictionary#spans.list.element.{leaf}": "false"
+        for leaf in ("node_id", "start", "end", "text_start", "text_end")
+    },
+}
+
 
 def _has_iceberg(spark: SparkSession) -> bool:
     # NB: plain `spark._jvm.org.apache.iceberg.Table` never raises — py4j
@@ -42,7 +56,8 @@ def write_output(df: DataFrame, target: str, partition_by: list[str] | None = No
     """Append-style write with dynamic partition overwrite: re-writing the
     same partition values replaces ONLY those directories, which makes a
     resumed round idempotent (a crashed round's partial bucket dirs are
-    replaced wholesale on retry)."""
+    replaced wholesale on retry). Parquet output is written with
+    ``PARQUET_OPTIONS``."""
     if target.startswith(ICEBERG_PREFIX):
         name = target[len(ICEBERG_PREFIX) :]
         writer = df.writeTo(name)
@@ -50,6 +65,7 @@ def write_output(df: DataFrame, target: str, partition_by: list[str] | None = No
     writer = (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
+        .options(**PARQUET_OPTIONS)
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)

@@ -450,3 +450,150 @@ def test_encoding_kernels_e2e(spark):
         (F.col("encoding") != F.col("e_exp"))
         | (F.col("source") != F.col("s_exp"))
     ).count() == 0
+
+
+@pytest.fixture(scope="module")
+def spans_job(spark, pages_path, tmp_path_factory):
+    """A finished two-round job with spans on: (config, stats)."""
+    out = str(tmp_path_factory.mktemp("spans_job"))
+    cfg = JobConfig(source=pages_path, output=out, n_buckets=4, buckets_per_round=2)
+    return cfg, run_extract_job(spark, cfg)
+
+
+SPAN_LEAVES = ("node_id", "parent_id", "start", "end", "text_start", "text_end")
+
+
+def test_job_output_delta_encoded_and_readable(spark, spans_job):
+    """The span ids and offsets are written DELTA_BINARY_PACKED on v2
+    pages, and Spark's vectorized and row readers, pyarrow and DuckDB all
+    read the same spans back."""
+    import glob
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    cfg, stats = spans_job
+    data = os.path.join(cfg.output, "data")
+    files = glob.glob(os.path.join(data, "bucket=*", "*.parquet"))
+    assert files and stats["errors"] == 0
+    for path in files:
+        meta = pq.ParquetFile(path).metadata
+        for g in range(meta.num_row_groups):
+            cols = meta.row_group(g)
+            enc = {
+                cols.column(i).path_in_schema: set(cols.column(i).encodings)
+                for i in range(cols.num_columns)
+            }
+            for leaf in ("node_id", "start", "end", "text_start", "text_end"):
+                got = enc[f"spans.list.element.{leaf}"]
+                assert got == {"DELTA_BINARY_PACKED"}, (path, leaf, got)
+            assert "RLE_DICTIONARY" in enc["spans.list.element.tag"]
+
+    def spark_sums() -> tuple:
+        s = spark.read.parquet(data).select(F.explode("spans").alias("s"))
+        row = s.agg(F.count("*"), *[F.sum(f"s.{c}") for c in SPAN_LEAVES]).first()
+        return tuple(row)
+
+    key = "spark.sql.parquet.enableVectorizedReader"
+    vectorized = spark_sums()
+    spark.conf.set(key, "false")
+    try:
+        row_reader = spark_sums()
+    finally:
+        spark.conf.unset(key)
+    sums = ", ".join(f"sum(s.{c})" for c in SPAN_LEAVES)
+    duck = duckdb.connect().execute(
+        f"SELECT count(*), {sums} FROM (SELECT unnest(spans) AS s FROM "
+        f"read_parquet('{data}/*/*.parquet'))"
+    ).fetchone()
+    spans = pq.read_table(data, columns=["spans"]).column("spans")
+    flat = pc.list_flatten(spans.combine_chunks())
+    arrow = (len(flat), *[pc.sum(flat.field(c)).as_py() for c in SPAN_LEAVES])
+    assert vectorized[0] > 0
+    assert vectorized == row_reader == tuple(duck) == arrow
+
+
+def test_job_manifest_matches_data(spark, spans_job):
+    """Every manifest row equals a countDistinct recomputation from data/,
+    and the manifest's schema is exactly MANIFEST_DDL."""
+    from pyspark.sql import types as T
+
+    from htmld_spark.pipeline.job import MANIFEST_DDL
+
+    cfg, stats = spans_job
+    manifest = spark.read.parquet(cfg.manifest_path)
+    assert manifest.schema == T.StructType.fromDDL(MANIFEST_DDL)
+    cols = ["n_rows", "n_bytes", "n_errors", "n_exec_partitions"]
+    got = {r["bucket"]: tuple(r[c] for c in cols) for r in manifest.collect()}
+    want = {
+        r["bucket"]: tuple(r[c] for c in cols)
+        for r in spark.read.parquet(os.path.join(cfg.output, "data"))
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.sum("n_bytes").alias("n_bytes"),
+            F.sum((~F.col("parse_ok")).cast("int")).alias("n_errors"),
+            F.countDistinct("exec_partition_id").alias("n_exec_partitions"),
+        )
+        .collect()
+    }
+    assert stats["rounds"] == 2 and len(got) == cfg.n_buckets
+    assert got == want
+
+
+def test_manifest_parts_of_both_writers_read_as_one(spark, tmp_path):
+    """A manifest part written by the earlier tuple-list path and one from
+    the Arrow path read back as one table, so a job resumes across the
+    change."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from htmld_spark.pipeline.job import (
+        MANIFEST_DDL,
+        _append_manifest,
+        _read_done_buckets,
+    )
+
+    cfg = JobConfig(source="src", output=str(tmp_path))
+    row = dict(
+        n_rows=3, n_bytes=300, n_errors=0, n_exec_partitions=2, wall_ms=9,
+        engine_version="e", rules_version="r", input_source="src",
+    )
+    old = [(0, 3, 300, 0, 2, 9, "e", "r", "src")]  # the earlier writer
+    spark.createDataFrame(old, MANIFEST_DDL).coalesce(1).write.mode(
+        "append"
+    ).parquet(cfg.manifest_path)
+    _append_manifest(spark, cfg, [dict(row, bucket=1)])
+
+    manifest = spark.read.parquet(cfg.manifest_path)
+    assert manifest.schema == T.StructType.fromDDL(MANIFEST_DDL)
+    assert sorted(tuple(r) for r in manifest.collect()) == [
+        old[0], (1, *old[0][1:]),
+    ]
+    assert pq.read_table(cfg.manifest_path).num_rows == 2
+    assert _read_done_buckets(spark, cfg.manifest_path) == {0, 1}
+
+
+def test_unreadable_manifest_raises(spark, pages_path, tmp_path):
+    """A manifest that cannot be read fails the job instead of reading as
+    "no bucket done", which would re-extract and re-append everything."""
+    cfg = JobConfig(source=pages_path, output=str(tmp_path), n_buckets=2,
+                    buckets_per_round=2, with_spans=False)
+    os.makedirs(cfg.manifest_path)
+    with open(os.path.join(cfg.manifest_path, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_extract_job(spark, cfg)
+    assert not os.path.exists(os.path.join(cfg.output, "data"))
+
+
+def test_uncommitted_first_manifest_append_reads_as_fresh(spark, tmp_path):
+    """A crash inside the first manifest append leaves only Spark's
+    ``_temporary`` directory: no bucket is done yet, and no error."""
+    from htmld_spark.pipeline.job import _read_done_buckets
+
+    manifest = tmp_path / "_manifest"
+    (manifest / "_temporary" / "0").mkdir(parents=True)
+    assert _read_done_buckets(spark, str(manifest)) == set()
+    assert _read_done_buckets(spark, str(tmp_path / "absent")) == set()
